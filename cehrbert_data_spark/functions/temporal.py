@@ -27,11 +27,12 @@ def _istr(col: Column) -> Column:
     return col.cast("long").cast("string")
 
 
-def epoch_seconds(col: Column) -> Column:
-    """Seconds since the epoch as DOUBLE, robust to every timestamp flavor
-    this engine encounters: TIMESTAMP (LTZ), TIMESTAMP_NTZ (parquet plain
-    micros — what the driver testdata now stores), DATE, and the
-    long-restored nanos path (already a TIMESTAMP after read_table).
+def epoch_seconds_sql(expr: str) -> str:
+    """Seconds since the epoch as DOUBLE (SQL text of ``expr``), robust to
+    every timestamp flavor this engine encounters: TIMESTAMP (LTZ),
+    TIMESTAMP_NTZ (parquet plain micros — what the query test data now
+    stores), DATE, and the long-restored nanos path (already a TIMESTAMP
+    after read_table). Column callers wrap it in ``F.expr``.
 
     Spark 4 refuses ``CAST(TIMESTAMP_NTZ AS DOUBLE)`` outright
     (DATATYPE_MISMATCH.CAST_WITHOUT_SUGGESTION), so every event-time
@@ -40,12 +41,6 @@ def epoch_seconds(col: Column) -> Column:
     UTC timezone (session.py); LTZ→DOUBLE keeps fractional seconds, unlike
     ``unix_timestamp`` which truncates to whole seconds.
     """
-    return col.cast("timestamp_ltz").cast("double")
-
-
-def epoch_seconds_sql(expr: str) -> str:
-    """SQL-text twin of :func:`epoch_seconds` (one contract, two renderings;
-    analyzed-plan identity pinned by tests/test_r11_optimizations.py)."""
     return f"CAST(CAST({expr} AS TIMESTAMP_LTZ) AS DOUBLE)"
 
 

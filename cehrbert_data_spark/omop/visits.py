@@ -23,8 +23,6 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cehrbert_data_spark.operators.windows import sessionize
-
 
 def construct_artificial_visits(
     patient_events: DataFrame,

@@ -28,9 +28,8 @@ def hourly_mean(
     timestamp and the mean value in the bucket. The mean is an exact decimal
     sum divided by the count (order-independent across partitions).
     """
-    # Expression strings (r11 RPC pass 4): identical analyzed tree to the
-    # Column form (pinned by tests/test_r11_optimizations.py) at ~1/4 the
-    # Py4J round trips per build.
+    # Expression strings (r11 RPC pass 4): ~1/4 the Py4J round trips per
+    # build of the equivalent Column chain.
     t, v = f"`{ts}`", f"`{value}`"
     sum_exact = f"sum(CAST({v} AS {decimal_type}))"
     return (
@@ -328,28 +327,15 @@ def corr_regression(
     )
 
 
-def _plain_ident(name: object) -> bool:
-    return isinstance(name, str) and name.isidentifier()
+def exact_sum(col: str, scale: str = "decimal(20,4)") -> Column:
+    """Order-independent sum of a double column (by NAME) via decimal
+    accumulation, built as one ``F.expr``."""
+    return F.expr(f"CAST(SUM(CAST(`{col}` AS {scale})) AS DOUBLE)")
 
 
-def exact_sum(col: str | Column, scale: str = "decimal(20,4)") -> Column:
-    """Order-independent sum of a double column via decimal accumulation.
-
-    Plain column names build as ONE ``F.expr`` instead of four Column-op
-    Py4J round trips — identical analyzed expression (r11 §7 discipline);
-    Columns and non-identifier names take the composed form."""
-    if _plain_ident(col):
-        return F.expr(f"CAST(SUM(CAST({col} AS {scale})) AS DOUBLE)")
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(scale)).cast("double")
-
-
-def exact_avg(col: str | Column, scale: str = "decimal(20,6)") -> Column:
-    """Order-independent mean: exact decimal sum / count, divided as doubles
-    so any two engines computing it bit-match."""
-    if _plain_ident(col):
-        return F.expr(
-            f"CAST(SUM(CAST({col} AS {scale})) AS DOUBLE) / COUNT({col})"
-        )
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(scale)).cast("double") / F.count(c)
+def exact_avg(col: str, scale: str = "decimal(20,6)") -> Column:
+    """Order-independent mean of a column (by NAME): exact decimal sum /
+    count, divided as doubles so any two engines computing it bit-match."""
+    return F.expr(
+        f"CAST(SUM(CAST(`{col}` AS {scale})) AS DOUBLE) / COUNT(`{col}`)"
+    )

@@ -116,17 +116,14 @@ def transitive_closure(
     tag = f"closure_loop_{uuid.uuid4().hex}"
     loop_spark = spark.newSession()
     loop_spark.conf.set("spark.sql.shuffle.partitions", str(loop_width))
-    import os
-
-    if bcast_small and os.environ.get("SPARK_GRAFT_CLOSURE_LOOP_AQE", "off") == "off":
+    if bcast_small:
         # r12 (verdict ask 6): the small-graph loop's per-iteration jobs are
         # tiny and fixed-shape (broadcast joins + an 8-wide min-distance
         # agg); AQE's per-stage re-planning only adds driver round trips —
         # each materialized shuffle stage becomes its own job. Disabling it
         # IN THE CLONE ONLY (the caller's session is untouched) collapses
         # every iteration to one job. At scale ``bcast_small`` is False and
-        # the loop keeps AQE's coalescing/skew handling unchanged. Env
-        # knob: SPARK_GRAFT_CLOSURE_LOOP_AQE=on restores AQE in the clone.
+        # the loop keeps AQE's coalescing/skew handling unchanged.
         loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
     gt_db = spark.conf.get("spark.sql.globalTempDatabase", "global_temp")
     closure.createOrReplaceGlobalTempView(f"{tag}_seed")

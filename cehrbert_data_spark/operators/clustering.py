@@ -40,10 +40,10 @@ algorithm's regime (hierarchical / PQ-style training), not this one's.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cehrbert_data_spark.operators.similarity import int_dot, with_quantized_norm
+from cehrbert_data_spark.operators.similarity import _int_dot_sql, with_quantized_norm
 from cehrbert_data_spark.operators.text import md5_long
 
 
@@ -71,28 +71,24 @@ def _seed_centroids(q: DataFrame, k: int) -> list[tuple[int, list[int]]]:
     return [(r["cid"], list(r["ivec"])) for r in rows]
 
 
-def _lit_vec(v: list[int]) -> Column:
-    return F.array(*[F.lit(int(x)).cast("long") for x in v])
-
-
 def _assign(q: DataFrame, centroids: list[tuple[int, list[int]]]) -> DataFrame:
     """One Lloyd assignment pass as a pure projection: nearest centroid by
     exact squared L2, ties to the lowest cid — ``array_min`` over literal
     (dist2, cid) structs compares fields in order, which IS the tie-break.
-    No join, no shuffle, one output row per corpus row."""
+    No join, no shuffle, one output row per corpus row. The literal
+    centroids render into one ``selectExpr``."""
     structs = []
     for cid, cvec in centroids:
         cnorm2 = sum(x * x for x in cvec)
+        lit_vec = "array(" + ", ".join(f"CAST({int(x)} AS BIGINT)" for x in cvec) + ")"
         dist2 = (
-            F.col("inorm2")
-            + F.lit(cnorm2).cast("long")
-            - 2 * int_dot(F.col("ivec"), _lit_vec(cvec))
+            f"inorm2 + CAST({cnorm2} AS BIGINT)"
+            f" - {_int_dot_sql('ivec', lit_vec)} * 2"
         )
-        structs.append(F.struct(dist2.alias("dist2"), F.lit(cid).cast("long").alias("cid")))
-    best = F.array_min(F.array(*structs))
-    return q.select(
-        "id", "ivec", "inorm2",
-        best["cid"].alias("cid"), best["dist2"].alias("dist2"),
+        structs.append(f"struct({dist2} AS dist2, CAST({cid} AS BIGINT) AS cid)")
+    best = f"array_min(array({', '.join(structs)}))"
+    return q.selectExpr(
+        "id", "ivec", "inorm2", f"{best}.cid AS cid", f"{best}.dist2 AS dist2"
     )
 
 

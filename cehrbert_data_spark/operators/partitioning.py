@@ -16,6 +16,10 @@ import os
 
 from pyspark.sql import DataFrame
 
+# Size-aware widen cap: at most one partition per 64 KiB of (compressed)
+# scan input — see widen_for_fanout.
+WIDEN_BYTES_PER_PART = 64 << 10
+
 
 def _estimated_scan_layout(df: DataFrame) -> tuple[int | None, int | None]:
     """Cheap (scan width, total bytes) estimate: file count, refined by file
@@ -109,8 +113,8 @@ def widen_for_fanout(
     target partition count (ids, not enum-ish columns).
 
     Size-aware target (r12, guide §2.5 / verdict ask 2): the repartition
-    width is capped at ``ceil(scan_bytes / SPARK_GRAFT_WIDEN_BYTES_PER_PART)``
-    (default 64 KiB of compressed input per partition, env-overridable), so
+    width is capped at ``ceil(scan_bytes / WIDEN_BYTES_PER_PART)`` (64 KiB
+    of compressed input per partition), so
     a tiny table never fans out to ``defaultParallelism`` near-empty
     partitions whose scheduling overhead exceeds the map-parallelism win —
     the r11 scaling inversion (d_minhash_capped 2.3× FASTER on 8 cores than
@@ -125,11 +129,7 @@ def widen_for_fanout(
     else:
         target = df.sparkSession.sparkContext.defaultParallelism
         if nbytes is not None:
-            per_part = int(
-                os.environ.get("SPARK_GRAFT_WIDEN_BYTES_PER_PART", str(64 << 10))
-            )
-            if per_part > 0:
-                target = min(target, max(1, math.ceil(nbytes / per_part)))
+            target = min(target, max(1, math.ceil(nbytes / WIDEN_BYTES_PER_PART)))
     if width is None:
         width = df.rdd.getNumPartitions()  # fallback: exact but plans the RDD
     if width < target:

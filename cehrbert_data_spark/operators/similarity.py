@@ -28,42 +28,28 @@ def _sqlref(name: str) -> str:
     return name if "." in name or name.startswith("`") else f"`{name}`"
 
 
-def quantize(vec: Column | str, scale: int = 1000) -> Column:
-    """array<float> → array<long> by round(x*scale): exact arithmetic from
-    here on.
-
-    Pass the column NAME when you have one: the whole expression then builds
-    in a single F.expr round trip instead of one Py4J RPC per lambda
-    operator (guide §1 fixed overheads — same analyzed expression, measured
-    on the r11 minhash conversion). Column inputs keep the lambda path for
-    composed expressions.
-    """
-    if isinstance(vec, str):
-        return F.expr(
-            f"transform({_sqlref(vec)}, x -> CAST(round(x * {scale}) AS BIGINT))"
-        )
-    return F.transform(vec, lambda x: F.round(x * scale).cast("long"))
+def quantize(vec: str, scale: int = 1000) -> Column:
+    """array<float> column NAME → array<long> by round(x*scale): exact
+    arithmetic from here on. Builds as one ``F.expr`` (a single Py4J round
+    trip, not one per lambda operator)."""
+    return F.expr(
+        f"transform({_sqlref(vec)}, x -> CAST(round(x * {scale}) AS BIGINT))"
+    )
 
 
 def _int_dot_sql(a: str, b: str) -> str:
-    """SQL text of the exact integer dot product — shared by ``int_dot``
-    and call sites that inline it into a larger single-expr build."""
+    """SQL text of the exact integer dot product of two array<long> SQL
+    expressions — shared by ``int_dot`` and call sites that inline it into
+    a larger single-expr build."""
     return (
-        f"aggregate(zip_with({_sqlref(a)}, {_sqlref(b)}, (x, y) -> x * y),"
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
         f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
 
 
-def int_dot(a: Column | str, b: Column | str) -> Column:
-    """Exact integer dot product of two array<long> columns (names build via
-    one F.expr — see ``quantize``)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_int_dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+def int_dot(a: str, b: str) -> Column:
+    """Exact integer dot product of two array<long> columns, by NAME."""
+    return F.expr(_int_dot_sql(_sqlref(a), _sqlref(b)))
 
 
 def with_quantized_norm(df: DataFrame, vec_col: str, out_vec: str = "ivec") -> DataFrame:
@@ -102,7 +88,7 @@ def cosine_topk(
     scored = pairs.selectExpr(
         "q_id",
         "n_id",
-        f"CAST({_int_dot_sql('q_vec', 'n_vec')} AS DOUBLE)"
+        f"CAST({_int_dot_sql('`q_vec`', '`n_vec`')} AS DOUBLE)"
         " / (SQRT(q_norm2) * SQRT(n_norm2)) AS cosine",
     )
     return (

@@ -31,7 +31,7 @@ def sql_str(s: str) -> str:
 def words_sql(text_expr: str) -> str:
     """SQL-text twin of :func:`words` (same tree, one definition of the
     tokenization contract rendered two ways; analyzed-plan identity is
-    pinned by tests/test_r11_optimizations.py)."""
+    pinned by tests/test_text_dedup_sim.py)."""
     return f"split(trim({text_expr}), '\\\\s+')"
 
 
@@ -92,7 +92,7 @@ def md5_long(col: Column, bits: int = 60) -> Column:
 def md5_long_sql(expr: str, bits: int = 60) -> str:
     """Spark-SQL-text twin of :func:`md5_long` (one hash contract, two
     renderings; analyzed-plan identity pinned by
-    tests/test_r11_optimizations.py)."""
+    tests/test_text_dedup_sim.py)."""
     return f"CAST(conv(substring(md5({expr}), 1, {bits // 4}), 16, 10) AS BIGINT)"
 
 
@@ -108,7 +108,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Built as expression STRINGS (r11 RPC pass 4, guide §1.2): the Column
     form cost ~290 Py4J round trips per build; one selectExpr builds the
-    same analyzed tree (identity pinned in tests/test_r11_optimizations.py,
+    same analyzed tree (identity pinned in tests/test_text_dedup_sim.py,
     lambda variable names aside) for a handful.
     """
     t = f"`{text_col}`"

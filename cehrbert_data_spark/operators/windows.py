@@ -9,12 +9,13 @@ cohorts/spark_app_base.py:507, tools/ehrshot_to_omop.py:488). Use
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cehrbert_data_spark.functions.temporal import epoch_seconds
+from cehrbert_data_spark.functions.temporal import epoch_seconds_sql
 
 
 def _require_partition(partition_by: Sequence) -> list:
@@ -27,88 +28,60 @@ def _require_partition(partition_by: Sequence) -> list:
     return parts
 
 
-def _order_fragment_col(frag: str | Column) -> Column:
-    """Parse a SQL order fragment (``"v DESC"``, ``"ts ASC NULLS LAST"``)
-    into a sort Column for the Column-path fallbacks: when a fast-path guard
-    (out-column collision, non-literal gap) re-routes an all-string call to
-    the Window API, the string fragments must still order correctly (r12 —
-    previously the fallback would try to resolve ``"v DESC"`` as a name)."""
-    if not isinstance(frag, str):
-        return frag
-    s = frag.strip()
-    up = s.upper()
-    nulls = ""
-    for suffix in (" NULLS FIRST", " NULLS LAST"):
-        if up.endswith(suffix):
-            nulls = suffix.strip().replace("NULLS ", "").lower()  # first|last
-            s, up = s[: -len(suffix)], up[: -len(suffix)]
-            break
-    direction = "asc"
-    for suffix, d in ((" DESC", "desc"), (" ASC", "asc")):
-        if up.endswith(suffix):
-            direction = d
-            s = s[: -len(suffix)]
-            break
-    col = F.expr(s.strip())
-    method = direction if not nulls else f"{direction}_nulls_{nulls}"
-    return getattr(col, method)()
-
-
 def _quote_name(name: str) -> str:
-    """Backtick-quote a plain column NAME for SQL-string fast paths (r12
-    advice): reserved words ('order') and special characters parse the same
-    as the F.col path; embedded backticks escape by doubling. Only for
-    identifiers — order_by entries stay raw because they are documented SQL
-    fragments."""
+    """Backtick-quote a plain column NAME for SQL text: reserved words
+    ('order') and special characters parse the same as F.col; embedded
+    backticks escape by doubling."""
     return f"`{name.replace('`', '``')}`"
+
+
+def _window_spec(partition_by: Sequence[str], order_by: Sequence[str]) -> str:
+    """``PARTITION BY … ORDER BY …`` text for the SQL-rendered window
+    operators. Partition entries are column NAMES (quoted); order entries
+    are SQL fragments (``"v DESC"``, ``"ts ASC NULLS LAST"``) passed through
+    raw. Anything else is refused here, before any plan is built."""
+    parts = _require_partition(partition_by)
+    order = list(order_by)
+    if not all(isinstance(p, str) for p in parts):
+        raise ValueError(f"partition_by takes column names, got {parts!r}")
+    if not order or not all(isinstance(o, str) for o in order):
+        raise ValueError(f"order_by takes non-empty SQL fragments, got {order!r}")
+    return (
+        f"PARTITION BY {', '.join(_quote_name(p) for p in parts)} "
+        f"ORDER BY {', '.join(order)}"
+    )
 
 
 def ordered_rank(
     df: DataFrame,
-    partition_by: Sequence[str | Column],
-    order_by: Sequence[Column | str],
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
     out: str = "rank",
     kind: str = "row_number",
 ) -> DataFrame:
     """W1/W2/W3: row_number / dense_rank / rank over a deterministic multi-key
     order (the reference's 5-key orderings, utils/spark_utils.py:357-365).
 
-    ``order_by`` entries may be SQL fragments (``"o_orderdate DESC"``): the
-    all-string form builds one selectExpr — identical analyzed tree to the
-    Column form (pinned by tests/test_r11_optimizations.py) at a fraction
-    of the Py4J round trips (r11 RPC pass 4). String ``partition_by``
-    entries are column NAMES (quoted), not fragments."""
+    ``partition_by`` entries are column names; ``order_by`` entries are SQL
+    fragments (``"o_orderdate DESC"``). The window builds as one SQL
+    expression — a handful of Py4J round trips — and replaces an existing
+    ``out`` column in place."""
     if kind not in ("row_number", "dense_rank", "rank"):
         raise KeyError(kind)
-    parts = _require_partition(partition_by)
-    if (
-        all(isinstance(p, str) for p in parts)
-        and all(isinstance(o, str) for o in order_by)
-        and out not in df.columns  # selectExpr('*', …) cannot REPLACE a column
-    ):
-        quoted = [_quote_name(p) for p in parts]
-        return df.selectExpr(
-            "*",
-            f"{kind}() OVER (PARTITION BY {', '.join(quoted)} "
-            f"ORDER BY {', '.join(order_by)}) AS {_quote_name(out)}",
-        )
-    fn = {"row_number": F.row_number, "dense_rank": F.dense_rank, "rank": F.rank}[kind]
-    w = Window.partitionBy(*parts).orderBy(
-        *[_order_fragment_col(o) for o in order_by]
-    )
-    return df.withColumn(out, fn().over(w))
+    over = _window_spec(partition_by, order_by)
+    return df.withColumn(out, F.expr(f"{kind}() OVER ({over})"))
 
 
 def top_n_per_group(
     df: DataFrame,
-    partition_by: Sequence[str | Column],
-    order_by: Sequence[Column | str],
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
     n: int = 1,
 ) -> DataFrame:
     """O2: keep the best ``n`` rows per group (rank-1 dedup,
-    reference: cohorts/spark_app_base.py:517-520). String ``order_by``
-    entries are SQL fragments (``"o_orderdate DESC"``, see
-    :func:`ordered_rank`); string partition entries are column names.
+    reference: cohorts/spark_app_base.py:517-520). ``order_by`` entries are
+    SQL fragments (``"o_orderdate DESC"``) and ``partition_by`` entries are
+    column names, as for :func:`ordered_rank`.
 
     For ``n=1`` with single-direction ordering prefer
     :func:`top1_per_group_agg` — same rows, map-side combinable, immune to
@@ -384,71 +357,46 @@ def merge_intervals(
 
 def sessionize(
     df: DataFrame,
-    partition_by: Sequence[str | Column],
-    order_by: Sequence[Column | str],
-    ts: str | Column,
-    gap: Column | float | int,
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    ts: str,
+    gap: float | int,
     out: str = "session_id",
 ) -> DataFrame:
     """W7: split an ordered stream into sessions at gaps exceeding ``gap``.
 
     The new-session flag is a lagged time-delta comparison; the session id is
     its running sum over an explicit rows-frame — the reference's visit-merge
-    sessionization (tools/connect_omop_visit.py:44-49). ``gap`` is a Column
-    expression (or plain number of seconds) compared against ``ts - lag(ts)``
-    in seconds, e.g. ``F.lit(24*3600)``. ``order_by`` entries may be SQL
-    fragments (``"ts ASC"``). Sessions are numbered from 0 within each
-    partition.
+    sessionization (tools/connect_omop_visit.py:44-49). ``partition_by`` and
+    ``ts`` are column names, ``order_by`` entries are SQL fragments
+    (``"ts ASC"``) and ``gap`` is a finite number of seconds compared against
+    ``ts - lag(ts)``. Sessions are numbered from 0 within each partition;
+    an existing ``out`` column is replaced.
     """
-    parts = _require_partition(partition_by)
-    if isinstance(gap, bool):
-        # bool is an int subclass: it would render as invalid SQL ('True')
-        # on the string path and fail boolean-vs-double analysis on the
-        # Column path — reject it crisply instead (r12 advice).
-        raise ValueError("sessionize gap must be a number of seconds or a Column, not bool")
-    # Expression-string fast path (r11 RPC pass 4): when every input is a
-    # plain name / SQL fragment / numeric literal, build the whole nested
-    # window as ONE selectExpr — the analyzer extracts the inner lag exactly
-    # as it does for the Column form (identity pinned by
-    # tests/test_r11_optimizations.py), for ~1/5 the Py4J round trips.
-    if (
-        all(isinstance(p, str) for p in partition_by)
-        and all(isinstance(o, str) for o in order_by)
-        and isinstance(ts, str)
-        and isinstance(gap, (int, float))
-        and out not in df.columns  # selectExpr('*', …) cannot REPLACE a column
-        # Floats whose shortest repr needs scientific notation ('1e-05') or
-        # is non-finite have no plan-identical 'nnnD' literal rendering —
-        # those take the Column path below (r12 advice). Plain positional
-        # reprs ('1800.0') render as the same double literal F.lit builds.
-        and (not isinstance(gap, float) or repr(gap).replace(".", "").replace("-", "").isdigit())
-    ):
-        from cehrbert_data_spark.functions.temporal import epoch_seconds_sql
-
-        over = (
-            f"PARTITION BY {', '.join(_quote_name(p) for p in partition_by)} "
-            f"ORDER BY {', '.join(order_by)}"
+    over = _window_spec(partition_by, order_by)
+    if not isinstance(ts, str):
+        raise ValueError(f"sessionize ts takes a column name, got {ts!r}")
+    # bool is an int subclass and would render as invalid SQL ('True').
+    if isinstance(gap, bool) or not isinstance(gap, (int, float)) or not math.isfinite(gap):
+        raise ValueError(
+            f"sessionize gap must be a finite number of seconds, "
+            f"got {type(gap).__name__} {gap!r}"
         )
-        gap_lit = f"{gap!r}D" if isinstance(gap, float) else str(gap)
-        ts_q = _quote_name(ts)
-        delta_sql = (
-            f"{epoch_seconds_sql(ts_q)} - "
-            f"{epoch_seconds_sql(f'lag({ts_q}) OVER ({over})')}"
-        )
-        return df.selectExpr(
-            "*",
-            f"sum(CASE WHEN {delta_sql} > {gap_lit} THEN 1 ELSE 0 END) "
-            f"OVER ({over} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-            f"AS {_quote_name(out)}",
-        )
-    w = Window.partitionBy(*parts).orderBy(
-        *[_order_fragment_col(o) for o in order_by]
-    )
-    ts_col = F.col(ts) if isinstance(ts, str) else ts
+    # Floats render as double literals ('1800.0D', '1e-05D'), the literal
+    # F.lit builds; ints stay integer literals.
+    gap_lit = f"{gap!r}D" if isinstance(gap, float) else str(gap)
     # NTZ-safe epoch subtraction: the testdata's timestamp flavor has changed
     # under us once already (TIMESTAMP(NANOS) -> plain micros / NTZ); never
-    # assume which one arrives.
-    delta = epoch_seconds(ts_col) - epoch_seconds(F.lag(ts_col).over(w))
-    is_new = F.when(delta > gap, F.lit(1)).otherwise(F.lit(0))
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(out, F.sum(is_new).over(frame))
+    # assume which one arrives. The analyzer extracts the inner lag window.
+    ts_q = _quote_name(ts)
+    delta_sql = (
+        f"{epoch_seconds_sql(ts_q)} - "
+        f"{epoch_seconds_sql(f'lag({ts_q}) OVER ({over})')}"
+    )
+    return df.withColumn(
+        out,
+        F.expr(
+            f"sum(CASE WHEN {delta_sql} > {gap_lit} THEN 1 ELSE 0 END) "
+            f"OVER ({over} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        ),
+    )

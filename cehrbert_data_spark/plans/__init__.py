@@ -1,5 +1,1 @@
-"""Plan-level utilities: derived-table caching and pipeline composition."""
-
-from cehrbert_data_spark.plans.cache import DerivedTableCache
-
-__all__ = ["DerivedTableCache"]
+"""Plan-level utilities: physical-plan text and exchange budgets."""

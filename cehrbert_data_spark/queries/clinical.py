@@ -25,7 +25,7 @@ def _nth_order(spark, sf_dir, n):
     ranked = ordered_rank(
         orders,
         ["o_custkey"],
-        [F.col("o_orderdate"), F.col("o_orderkey")],
+        ["o_orderdate", "o_orderkey"],
         out="__rn",
     )
     return ranked.where(F.col("__rn") == n).select(
@@ -178,7 +178,7 @@ def w3_rank_with_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = ordered_rank(
         orders.withColumn("price_bucket", F.floor(F.col("o_totalprice") / 10000)),
         ["o_custkey"],
-        [F.col("price_bucket").desc(), F.col("o_orderkey")],
+        ["price_bucket DESC", "o_orderkey"],
         out="price_rank",
         kind="rank",
     )

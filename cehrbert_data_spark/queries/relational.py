@@ -619,8 +619,6 @@ FROM c GROUP BY o_orderstatus
 # --- W1/O2: row_number top-1 per group -------------------------------------------
 
 def w1_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # String order fragments ride ordered_rank's expression-string fast
-    # path (r11 RPC pass 4); analyzed plan identical to the Column form.
     orders = read_table(spark, sf_dir, "orders")
     return top_n_per_group(
         orders,
@@ -674,7 +672,7 @@ def w2_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = ordered_rank(
         rev,
         ["s_nationkey"],
-        [F.col("revenue_d").desc(), F.col("s_suppkey").asc()],
+        ["revenue_d DESC", "s_suppkey ASC"],
         out="rank_in_nation",
         kind="dense_rank",
     )
@@ -759,8 +757,6 @@ FROM orders
 # --- W7: sessionization (running-sum window over explicit frame) ----------------------
 
 def w7_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # String inputs ride sessionize's expression-string fast path (r11 RPC
-    # pass 4); analyzed plan identical to the Column form (pinned by test).
     events = read_table(spark, sf_dir, "events")
     sessions = sessionize(
         events,
@@ -1032,11 +1028,11 @@ def w11_trailing_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frame holds every event within the last 7 DAYS of event time, not
     the last N rows). Ordering key is NTZ-safe epoch seconds, so frame
     bounds are plain numbers in both engines."""
-    from cehrbert_data_spark.functions.temporal import epoch_seconds
+    from cehrbert_data_spark.functions.temporal import epoch_seconds_sql
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events")
-    epoch = epoch_seconds(F.col("ts"))
+    epoch = F.expr(epoch_seconds_sql("ts"))
     w = (
         Window.partitionBy("user_id")
         .orderBy(epoch)

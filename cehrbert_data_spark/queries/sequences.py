@@ -58,9 +58,8 @@ def seq_user_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape here: order encoded in the struct's leading fields (ts, event_id)
     so the array sort is the deterministic 5-key ordering.
     """
-    # Expression strings (r11 RPC pass 4): same analyzed tree as the Column
-    # form (pinned by tests/test_r11_optimizations.py) for ~1/6 the Py4J
-    # round trips per build.
+    # Expression strings (r11 RPC pass 4): ~1/6 the Py4J round trips per
+    # build of the equivalent Column chain.
     events = read_table(spark, sf_dir, "events")
     packed = (
         events.selectExpr("user_id", "struct(ts, event_id, event_type) AS s")

@@ -223,7 +223,7 @@ def asof_join_stream(
 
     from pyspark.sql import Window
 
-    from cehrbert_data_spark.functions.temporal import epoch_seconds
+    from cehrbert_data_spark.functions.temporal import epoch_seconds_sql
 
     if not left.isStreaming and not right.isStreaming:
         # Self-join-safe batch path: left and right commonly derive from the
@@ -241,8 +241,8 @@ def asof_join_stream(
         # (keys, ts) would share one rank partition and collapse to a single
         # output row — silent row loss the streaming path doesn't have.
         lid = left.withColumn("__lid", F.monotonically_increasing_id())
-        point = epoch_seconds(F.col(ts))
-        r_low = epoch_seconds(F.col("__r_ts"))
+        point = F.expr(epoch_seconds_sql(f"`{ts}`"))
+        r_low = F.expr(epoch_seconds_sql("`__r_ts`"))
         cond = _ft.reduce(
             _op.and_, [F.col(k) == F.col(f"__r_{k}") for k in keys]
         ) & point.between(r_low, r_low + F.lit(float(lookback_s)))

@@ -4,6 +4,8 @@ folklore."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -119,3 +121,58 @@ def test_morton_key_matches_bit_reference(spark):
     for r in got:
         exp = spread_ref(r["x"] & 0xFFFF) | (spread_ref(r["y"] & 0xFFFF) << 1)
         assert r["z"] == exp, (r["x"], r["y"])
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_widen_by_key_hash_partitions_and_reuses_exchange(spark):
+    from cehrbert_data_spark.operators.partitioning import widen_for_fanout
+
+    df = spark.createDataFrame(
+        [(i, i % 7) for i in range(1000)], "id: long, v: long"
+    )
+    out = widen_for_fanout(df, min_partitions=8, by="id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(id" in plan
+    # round-robin pays a sort-before-repartition; the hash form must not
+    assert "RoundRobinPartitioning" not in plan
+    # a groupBy on the widen key reuses the exchange: exactly ONE exchange
+    agg = widen_for_fanout(df, min_partitions=8, by="id").groupBy("id").count()
+    agg_plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert agg_plan.count("Exchange") == 1
+    # identical rows either way
+    assert _rows(out) == _rows(df)
+
+
+def test_widen_target_scales_with_input_bytes(spark, tmp_path):
+    from cehrbert_data_spark.operators.partitioning import (
+        WIDEN_BYTES_PER_PART,
+        widen_for_fanout,
+    )
+
+    path = str(tmp_path / "tiny")
+    spark.range(1000).selectExpr("id", "id * 2 AS v").coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    size = os.path.getsize(
+        next(str(p) for p in (tmp_path / "tiny").iterdir() if str(p).endswith(".parquet"))
+    )
+    out = widen_for_fanout(df, by="id")
+    # the tiny file must NOT fan out to defaultParallelism partitions:
+    # the byte cap bounds the target at ceil(bytes / chunk)
+    expected = max(1, -(-size // WIDEN_BYTES_PER_PART))
+    parallelism = spark.sparkContext.defaultParallelism
+    assert out.rdd.getNumPartitions() <= min(parallelism, max(expected, 1))
+    # rows unchanged
+    assert out.count() == 1000
+
+
+def test_widen_explicit_min_partitions_bypasses_cap(spark, tmp_path):
+    from cehrbert_data_spark.operators.partitioning import widen_for_fanout
+
+    path = str(tmp_path / "tiny2")
+    spark.range(100).coalesce(1).write.mode("overwrite").parquet(path)
+    df = spark.read.parquet(path)
+    out = widen_for_fanout(df, min_partitions=4, by="id")
+    assert out.rdd.getNumPartitions() == 4

@@ -1,43 +1,8 @@
-"""Derived-table cache (reference: processed_measurement memo,
-spark_utils.py:1072-1075) and temp-view catalog (S9) tests."""
+"""Temp-view catalog (S9) tests."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from cehrbert_data_spark.plans.cache import DerivedTableCache
 from cehrbert_data_spark.sources.catalog import drop_view, register_views
-
-
-def test_cache_computes_once_then_reloads(spark, tmp_path):
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return spark.range(5).withColumn("v", F.col("id") * 2)
-
-    cache = DerivedTableCache(spark, str(tmp_path))
-    first = cache.get_or_compute("derived", compute)
-    second = cache.get_or_compute("derived", compute)
-    assert len(calls) == 1  # second call reloaded from parquet
-    assert sorted(r["v"] for r in second.collect()) == [0, 2, 4, 6, 8]
-    assert first.count() == second.count()
-
-
-def test_cache_refresh_recomputes(spark, tmp_path):
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return spark.range(3)
-
-    cache = DerivedTableCache(spark, str(tmp_path))
-    cache.get_or_compute("t", compute)
-    DerivedTableCache(spark, str(tmp_path), refresh=True).get_or_compute("t", compute)
-    assert len(calls) == 2
-
-    cache.invalidate("t")
-    assert not cache.exists("t")
 
 
 def test_register_and_drop_views(spark):

@@ -155,3 +155,77 @@ def test_pagerank_emit_prev_is_previous_iteration(spark):
     }
     assert {n: v[0] for n, v in both.items()} == r4
     assert {n: v[1] for n, v in both.items()} == r3
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_closure_loop_broadcast_and_shuffle_paths_agree(spark):
+    from cehrbert_data_spark.operators.closure import _closure_loop
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)] + [(1, 4), (2, 6)],
+        "src: int, dst: int",
+    )
+    level_1 = edges.select("src", "dst", F.lit(1).alias("distance"))
+    step = edges.select(
+        F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
+    )
+
+    def run(bcast):
+        seed = level_1.distinct().localCheckpoint(eager=False)
+        out = _closure_loop(
+            seed, seed, step, 50, hop_batch=2,
+            bcast_small=bcast, pairs_so_far=9,
+        )
+        return _rows(out)
+
+    assert run(True) == run(False)
+
+
+def test_closure_early_stop_short_of_capacity_matches_plain_bfs(spark):
+    """Path 0->1->...->8 (max min-distance 8): with hop_batch=4 the second
+    iteration's max lands short of its capacity 9, so the loop stops
+    WITHOUT running the empty-check iteration. Rows (incl. distances) must
+    equal plain frontier BFS, which never early-stops."""
+    from cehrbert_data_spark.operators.closure import transitive_closure
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "src: int, dst: int"
+    )
+    batched = _rows(transitive_closure(edges, hop_batch=4))
+    plain = _rows(transitive_closure(edges, hop_batch=1))
+    assert batched == plain
+    assert len(batched) == 36  # 9 nodes: all ordered pairs, minimal distances
+
+
+def test_closure_early_stop_boundary_depth_equals_capacity(spark):
+    """Path of max min-distance 5 == first-iteration capacity (1 + B): the
+    max-distance signal is ambiguous there, the loop must run the next
+    iteration (which proves emptiness) rather than stop early."""
+    from cehrbert_data_spark.operators.closure import transitive_closure
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "src: int, dst: int"
+    )
+    batched = _rows(transitive_closure(edges, hop_batch=4))
+    plain = _rows(transitive_closure(edges, hop_batch=1))
+    assert batched == plain
+    assert max(r[2] for r in batched) == 5
+
+
+def test_closure_early_stop_diamond_fanout_distances_minimal(spark):
+    """Diamond + shortcut graph: pairs reachable by multiple path lengths
+    must record the MINIMAL distance under the early-stopping batched loop."""
+    from cehrbert_data_spark.operators.closure import transitive_closure
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (1, 4), (4, 7)],
+        "src: int, dst: int",
+    )
+    batched = _rows(transitive_closure(edges, hop_batch=4))
+    plain = _rows(transitive_closure(edges, hop_batch=1))
+    assert batched == plain
+    by_pair = {(s, d): dist for s, d, dist in batched}
+    assert by_pair[(1, 7)] == 2  # 1->4->7 via the shortcuts, not 6 hops

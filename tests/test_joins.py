@@ -316,3 +316,63 @@ def test_overlap_join_buckets_matches_brute_force(spark):
             ).collect()
         )
         assert got == expected, f"bucket={bucket}"
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture
+def asof_inputs(spark):
+    left = spark.createDataFrame(
+        [(1, "2020-01-01"), (2, "2020-02-01"), (3, "2020-03-01")],
+        "k: int, start: string",
+    ).withColumn("start", F.to_timestamp("start"))
+    right = spark.createDataFrame(
+        [
+            (1, "2020-01-05", 10),
+            (1, "2020-01-03", 11),
+            (1, "2020-01-03", 9),   # ts tie -> tiebreak by seq
+            (2, "2020-02-20", 20),
+            (3, "2021-01-01", 30),  # outside the window -> no match
+        ],
+        "k: int, ts: string, seq: int",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    return left, right
+
+
+def test_asof_agg_strategy_matches_window(spark, asof_inputs):
+    left, right = asof_inputs
+    kw = dict(
+        on="k",
+        point=right["ts"],
+        lower=left["start"],
+        upper=F.expr("start + INTERVAL 30 DAYS"),
+        left_key="k",
+    )
+    win = asof_join(
+        left, right,
+        metric=[F.col("ts").asc(), F.col("seq").asc()],
+        **kw,
+    )
+    agg = asof_join(left, right, metric=["ts", "seq"], strategy="agg", **kw)
+    assert _rows(win.select("k", "ts", "seq")) == _rows(agg.select("k", "ts", "seq"))
+    # the agg form elects by partial aggregation: no Window in the plan
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "partial_min" in plan
+
+
+def test_asof_agg_strategy_guards(spark, asof_inputs):
+    left, right = asof_inputs
+    kw = dict(
+        on="k",
+        point=right["ts"],
+        lower=left["start"],
+        upper=F.expr("start + INTERVAL 30 DAYS"),
+        left_key="k",
+    )
+    with pytest.raises(ValueError, match="how='inner'"):
+        asof_join(left, right, metric=["ts"], strategy="agg", how="left", **kw)
+    with pytest.raises(ValueError, match="column NAMES"):
+        asof_join(left, right, metric=[F.col("ts").asc()], strategy="agg", **kw)

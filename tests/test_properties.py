@@ -50,7 +50,7 @@ def test_sessionize_session_count(ts, gap):
     df = spark.createDataFrame([(1, t) for t in ts], "k: int, t: long").withColumn(
         "ts", F.col("t").cast("timestamp")
     )
-    out = sessionize(df, ["k"], [F.col("ts"), F.col("t")], "ts", F.lit(gap))
+    out = sessionize(df, ["k"], ["ts", "t"], "ts", gap)
     n_sessions = out.select("session_id").distinct().count()
     s = sorted(ts)
     expected = 1 + sum(1 for a, b in zip(s, s[1:]) if b - a > gap)

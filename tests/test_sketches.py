@@ -224,3 +224,45 @@ def test_kmv_small_set_is_exact(spark):
     assert row["est_distinct_a"] == 50.0
     assert row["est_distinct_b"] == 50.0
     assert row["n_common"] == 25
+
+
+def test_bloom_probe_plan_has_no_probe_side_shuffle(spark):
+    from cehrbert_data_spark.operators.sketches import bloom_build, bloom_probe
+
+    build = spark.range(100).selectExpr("id AS v")
+    probe = spark.range(200).selectExpr("id AS v")
+    filt = bloom_build(build, F.col("v"), m_bits=4096, k=4)
+    out = bloom_probe(probe, filt, F.col("v"), m_bits=4096, k=4, assume_distinct=True)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # with assume_distinct the probe path is a projection + one-row
+    # broadcast attach: the only Generate (explode) is the filter BUILD
+    # side, and the probe key never hash-partitions
+    assert plan.count("Generate") == 1
+    assert plan.count("BroadcastNestedLoopJoin") == 1
+    assert "hashpartitioning(probe_key" not in plan
+    # membership results: every built key passes (no false negatives)
+    flags = {r["probe_key"]: r["bloom_maybe"] for r in out.collect()}
+    assert all(flags[i] for i in range(100))
+
+
+def test_cms_estimate_assume_distinct_matches_default(spark):
+    from cehrbert_data_spark.operators.sketches import cms_build, cms_estimate
+
+    data = spark.range(500).selectExpr("CAST(id % 37 AS LONG) AS v")
+    probe = spark.range(37).selectExpr("id AS v")
+    sk = cms_build(data, F.col("v"), depth=4, width=64)
+    a = {
+        r["probe_key"]: r["cms_est"]
+        for r in cms_estimate(probe, sk, F.col("v"), depth=4, width=64).collect()
+    }
+    b = {
+        r["probe_key"]: r["cms_est"]
+        for r in cms_estimate(
+            probe, sk, F.col("v"), depth=4, width=64, assume_distinct=True
+        ).collect()
+    }
+    assert a == b
+    # CMS never underestimates the true count (500 rows over 37 keys)
+    for key, est in a.items():
+        true = 500 // 37 + (1 if key < 500 % 37 else 0)
+        assert est >= true

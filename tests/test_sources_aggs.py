@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -169,3 +170,36 @@ def test_write_shuffled_shards_deterministic(spark, tmp_path):
     assert o1 != o3  # seed reshuffles
     # decorrelated from ingest order: no shard is a contiguous id range
     assert all(shard != sorted(shard) for shard in o1 if len(shard) > 3)
+
+
+def test_schema_cache_reinfers_on_inplace_part_rewrite(spark, tmp_path):
+    from cehrbert_data_spark.sources import readers
+
+    sf_dir = str(tmp_path)
+    tbl = os.path.join(sf_dir, "t")
+    spark.range(10).selectExpr("id AS a").write.parquet(tbl)
+    first = readers.read_table(spark, sf_dir, "t")
+    assert [f.name for f in first.schema.fields] == ["a"]
+    # rewrite the SAME part filename in place with a different schema,
+    # keeping the directory mtime fixed (POSIX: replacing file contents
+    # does not touch the parent dir's mtime when the name set is unchanged)
+    parts = [p for p in os.listdir(tbl) if p.endswith(".parquet")]
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dir_stat = os.stat(tbl)
+    for p in parts:
+        pq.write_table(
+            pa.table({"b": pa.array([1, 2], type=pa.int64())}),
+            os.path.join(tbl, p),
+        )
+        # drop the stale Hadoop checksum sidecar for the rewritten bytes
+        crc = os.path.join(tbl, f".{p}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        # make the entry mtime visibly newer than the cached key
+        future = time.time() + 5
+        os.utime(os.path.join(tbl, p), (future, future))
+    os.utime(tbl, (dir_stat.st_atime, dir_stat.st_mtime))  # freeze dir mtime
+    again = readers.read_table(spark, sf_dir, "t")
+    assert [f.name for f in again.schema.fields] == ["b"]

@@ -249,9 +249,11 @@ def test_int_dot_and_cosine_topk(spark):
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])],
         "vec_id: int, embedding: array<float>",
     )
-    d = df.select(
-        int_dot(quantize(F.col("embedding")), quantize(F.col("embedding"))).alias("n2")
-    ).collect()
+    d = (
+        df.select(quantize("embedding").alias("q"))
+        .select(int_dot("q", "q").alias("n2"))
+        .collect()
+    )
     assert d[0]["n2"] == 1000 * 1000
     top = cosine_topk(df, df.where(F.col("vec_id") == 0), "vec_id", "embedding", k=1).collect()
     assert [(r["q_id"], r["n_id"], r["rank"]) for r in top] == [(0, 1, 1)]
@@ -573,3 +575,77 @@ def test_pq_codes_and_adc_topk(spark):
     assert ranked == [1, 2, 3]
     adist = {r["n_id"]: r["adist2"] for r in out}
     assert adist[1] == 0 and adist[2] == adist[3] > 0
+
+
+# --- SQL-text twins of Column helpers must build IDENTICAL trees ----------
+
+
+def _norm_analyzed(df):
+    """Analyzed plan with expression ids and auto-generated lambda variable
+    names normalized away — the same discipline as
+    tools/snapshot_logical_plans.py."""
+    import re
+
+    s = df._jdf.queryExecution().analyzed().toString()
+    s = re.sub(r"lambda [a-z_0-9]+", "lambda <x>", s)
+    seen: dict[str, str] = {}
+
+    def sub(m):
+        k = m.group(0)
+        seen.setdefault(k, f"#{len(seen)}")
+        return seen[k]
+
+    return re.sub(r"#\d+", sub, s)
+
+
+def test_words_sql_twin_matches_words(spark):
+    from cehrbert_data_spark.operators.text import words, words_sql
+
+    df = spark.createDataFrame([("a b  c",)], "t: string")
+    a = df.select(words(F.col("t")).alias("w"))
+    b = df.selectExpr(f"{words_sql('t')} AS w")
+    assert _norm_analyzed(a) == _norm_analyzed(b)
+
+
+def test_md5_long_sql_twin_matches_md5_long(spark):
+    from cehrbert_data_spark.operators.text import md5_long, md5_long_sql
+
+    df = spark.createDataFrame([("abc",)], "t: string")
+    a = df.select(md5_long(F.col("t")).alias("h"), md5_long(F.col("t"), 48).alias("h48"))
+    b = df.selectExpr(f"{md5_long_sql('t')} AS h", f"{md5_long_sql('t', 48)} AS h48")
+    assert _norm_analyzed(a) == _norm_analyzed(b)
+
+
+def test_quality_features_tree_matches_column_form(spark):
+    """The selectExpr build of quality_features must produce the same
+    analyzed tree as the composed-Column original (lambda names aside)."""
+    from cehrbert_data_spark.operators.text import (
+        EN_STOPWORDS,
+        quality_features,
+        regex_tokens,
+        stopword_ratio,
+        words,
+    )
+
+    df = spark.createDataFrame([(1, "the cat sat on the mat")], "doc_id: long, text: string")
+    new = quality_features(df)
+    w = words(F.col("text"))
+    n_words = F.size(w)
+    total_word_chars = F.aggregate(
+        w, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
+    )
+    old = df.select(
+        "*",
+        F.length("text").alias("q_n_chars"),
+        n_words.alias("q_n_words"),
+        F.size(regex_tokens(F.col("text"))).alias("q_n_tokens"),
+        (total_word_chars.cast("double") / F.greatest(n_words, F.lit(1))).alias(
+            "q_mean_word_len"
+        ),
+        (
+            F.size(F.array_distinct(w)).cast("double")
+            / F.greatest(n_words, F.lit(1))
+        ).alias("q_distinct_ratio"),
+        stopword_ratio(w, EN_STOPWORDS).alias("q_stopword_ratio"),
+    )
+    assert _norm_analyzed(new) == _norm_analyzed(old)

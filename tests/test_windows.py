@@ -25,9 +25,7 @@ def _events(spark):
 
 
 def test_sessionize_gap_split(spark):
-    out = sessionize(
-        _events(spark), ["pid"], [F.col("ts")], "ts", F.lit(24 * 3600)
-    ).collect()
+    out = sessionize(_events(spark), ["pid"], ["ts"], "ts", 24 * 3600).collect()
     sess = {r["tag"]: r["session_id"] for r in out}
     assert sess == {"a": 0, "b": 0, "c": 1, "d": 1, "e": 0}
 
@@ -36,16 +34,21 @@ def test_ordered_rank_kinds(spark):
     df = spark.createDataFrame(
         [(1, 10), (1, 10), (1, 20), (2, 5)], "g: int, v: int"
     )
-    dense = ordered_rank(df, ["g"], [F.col("v")], out="r", kind="dense_rank").collect()
+    dense = ordered_rank(df, ["g"], ["v"], out="r", kind="dense_rank").collect()
     got = sorted((r["g"], r["v"], r["r"]) for r in dense)
     assert got == [(1, 10, 1), (1, 10, 1), (1, 20, 2), (2, 5, 1)]
+    ranked = ordered_rank(df, ["g"], ["v DESC"], out="r", kind="rank").collect()
+    got = sorted((r["g"], r["v"], r["r"]) for r in ranked)
+    assert got == [(1, 10, 2), (1, 10, 2), (1, 20, 1), (2, 5, 1)]
+    numbered = ordered_rank(df, ["g"], ["v DESC"], out="r").collect()
+    assert sorted(r["r"] for r in numbered if r["g"] == 1) == [1, 2, 3]
 
 
 def test_top_n_per_group(spark):
     df = spark.createDataFrame(
         [(1, 3, "x"), (1, 1, "keep"), (2, 2, "keep")], "g: int, v: int, tag: string"
     )
-    out = top_n_per_group(df, ["g"], [F.col("v").asc()], n=1).collect()
+    out = top_n_per_group(df, ["g"], ["v ASC"], n=1).collect()
     assert sorted(r["tag"] for r in out) == ["keep", "keep"]
     assert "__rn" not in out[0].asDict()
 
@@ -70,10 +73,10 @@ def test_top1_agg_matches_window_form(spark):
     def snap(out):
         return sorted((r["g"], r["v"], r["event_id"], r["tag"]) for r in out.collect())
 
-    win_asc = snap(top_n_per_group(df, ["g"], [F.col("v").asc(), F.col("event_id").asc()], n=1))
+    win_asc = snap(top_n_per_group(df, ["g"], ["v ASC", "event_id ASC"], n=1))
     agg_asc = snap(top1_per_group_agg(df, ["g"], ["v", "event_id"]))
     assert win_asc == agg_asc
-    win_desc = snap(top_n_per_group(df, ["g"], [F.col("v").desc(), F.col("event_id").desc()], n=1))
+    win_desc = snap(top_n_per_group(df, ["g"], ["v DESC", "event_id DESC"], n=1))
     agg_desc = snap(top1_per_group_agg(df, ["g"], ["v", "event_id"], descending=True))
     assert win_desc == agg_desc
     # map-side-combine contract: a partial_ min/max must run BEFORE the
@@ -130,11 +133,69 @@ def test_sessionize_timestamp_flavors(spark, tmp_path, flavor):
     )
     pq.write_table(table, str(tmp_path / "events.parquet"))
     df = read_table(spark, str(tmp_path), "events")
-    out = sessionize(df, ["pid"], [F.col("ts")], "ts", F.lit(24 * 3600)).collect()
+    out = sessionize(df, ["pid"], ["ts"], "ts", 24 * 3600).collect()
     assert {r["tag"]: r["session_id"] for r in out} == {"a": 0, "b": 0, "c": 1}
 
 
 def test_global_window_refused(spark):
     df = spark.createDataFrame([(1,)], "g: int")
     with pytest.raises(ValueError, match="global"):
-        ordered_rank(df, [], [F.col("g")])
+        ordered_rank(df, [], ["g"])
+
+
+# --- SQL rendering: quoting, in-place replacement, literal gaps ------------
+
+
+def test_ordered_rank_reserved_word_partition(spark):
+    df = spark.createDataFrame(
+        [(1, 10), (1, 20), (2, 30)], "order: int, v: int"
+    )
+    out = ordered_rank(df, ["order"], ["v DESC"], out="rk")
+    rows = {(r["order"], r["v"]): r["rk"] for r in out.collect()}
+    assert rows[(1, 20)] == 1 and rows[(1, 10)] == 2 and rows[(2, 30)] == 1
+
+
+def test_ordered_rank_existing_out_column_is_replaced(spark):
+    df = spark.createDataFrame([(1, 10, 99), (1, 20, 99)], "k: int, v: int, rk: int")
+    out = ordered_rank(df, ["k"], ["v ASC"], out="rk")
+    # withColumn REPLACES the pre-existing column: no duplicate/ambiguous one
+    assert out.columns.count("rk") == 1
+    assert {r["rk"] for r in out.collect()} == {1, 2}
+
+
+def test_sessionize_existing_out_column_is_replaced(spark):
+    df = spark.createDataFrame(
+        [(1, "2020-01-01 00:00:00", 7)], "user_id: int, ts: string, session_id: int"
+    ).selectExpr("user_id", "CAST(ts AS TIMESTAMP) AS ts", "session_id")
+    out = sessionize(df, ["user_id"], ["ts ASC"], ts="ts", gap=60)
+    assert out.columns.count("session_id") == 1
+    assert out.collect()[0]["session_id"] == 0
+
+
+def test_sessionize_scientific_float_gap(spark):
+    df = spark.createDataFrame(
+        [(1, "2020-01-01 00:00:00"), (1, "2020-01-01 00:00:01")],
+        "user_id: int, ts: string",
+    ).selectExpr("user_id", "CAST(ts AS TIMESTAMP) AS ts")
+    out = sessionize(df, ["user_id"], ["ts ASC"], ts="ts", gap=1e-05)
+    assert [r["session_id"] for r in out.orderBy("ts").collect()] == [0, 1]
+
+
+def test_sessionize_bool_gap_rejected(spark):
+    df = spark.createDataFrame(
+        [(1, "2020-01-01 00:00:00"), (1, "2020-01-01 02:00:00")],
+        "user_id: int, ts: string",
+    ).selectExpr("user_id", "CAST(ts AS TIMESTAMP) AS ts")
+    # bool is an int subclass that would render as invalid SQL ('True')
+    with pytest.raises(ValueError, match="bool"):
+        sessionize(df, ["user_id"], ["ts ASC"], ts="ts", gap=True)
+
+
+@pytest.mark.parametrize("gap", [float("nan"), float("inf"), float("-inf")])
+def test_sessionize_non_finite_gap_rejected(spark, gap):
+    df = spark.createDataFrame(
+        [(1, datetime.datetime(2020, 1, 1, 0, 0))], "user_id: int, ts: timestamp"
+    )
+    # no finite double literal renders these: refuse before building a plan
+    with pytest.raises(ValueError, match="finite"):
+        sessionize(df, ["user_id"], ["ts ASC"], ts="ts", gap=gap)

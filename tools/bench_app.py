@@ -48,9 +48,9 @@ def synthesize_omop(spark, sf_dir: str, omop_dir: str) -> dict:
     sess = sessionize(
         events,
         ["user_id"],
-        [F.col("ts").asc(), F.col("event_id").asc()],
+        ["ts ASC", "event_id ASC"],
         ts="ts",
-        gap=F.lit(24 * 3600.0),
+        gap=24 * 3600.0,
     )
     visits = (
         sess.groupBy("user_id", "session_id")

@@ -154,7 +154,7 @@ def main() -> int:
     def w1_window():
         return top_n_per_group(
             orders, ["o_custkey"],
-            [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()], n=1,
+            ["o_orderdate DESC", "o_orderkey DESC"], n=1,
         ).select(top1_cols)
 
     def w1_agg():
