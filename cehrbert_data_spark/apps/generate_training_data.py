@@ -117,8 +117,11 @@ def main(
     )
     # Materialization barrier: the reference writes/re-reads all_patient_events
     # (generate_training_data.py:154-157) so downstream id minting is stable.
-    # A dry run keeps the full lineage instead — nothing is written, and the
-    # plan check sees the WHOLE composed pipeline in one plan.
+    # A dry run skips it, as it writes nothing. The eager barriers in
+    # create_sequence_data_with_att and decorate_att still run jobs in a dry
+    # run, and the plan check sees only the plan after the last of them:
+    # the relink and decorate_clinical plans are pinned in
+    # tests/test_plan_shapes.py instead.
     if not dry_run:
         events = checkpoint_barrier(
             events, os.path.join(output_folder, "all_patient_events")
@@ -154,13 +157,13 @@ def main(
     )
 
     if plan_check:
-        # App-level plan budget: turns the plan-discipline unit tests into a
-        # guarantee about THIS composed pipeline — no single-partition
-        # window, no row-at-a-time Python eval, anywhere in the plan, and a
-        # shuffle-exchange ceiling (measured 25 default config / 33 with
-        # artificial visits — the heaviest supported config; 40 leaves
-        # refactor headroom while still failing on a doubled plan).
-        # Analysis-only: no job runs.
+        # App-level plan budget over the plan the sink would run: no
+        # single-partition window, no row-at-a-time Python eval, and a
+        # shuffle-exchange ceiling. Measured 6 exchanges with and without
+        # artificial visits, dry run or not (condition + procedure + drug
+        # with both roll-ups); everything upstream sits behind the clinical
+        # barrier (the ceiling of 40 predates it). The check itself is
+        # analysis-only, but the barriers above it have already run jobs.
         from cehrbert_data_spark.plans.budget import assert_plan_budget
 
         report = assert_plan_budget(

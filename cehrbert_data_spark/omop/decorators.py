@@ -61,6 +61,7 @@ from cehrbert_data_spark.omop.const import (
     inpatient_hour_token_priority,
     inpatient_token_priority,
 )
+from cehrbert_data_spark.sources.writers import checkpoint_barrier
 
 LARGE_INTEGER = 1_000_000
 
@@ -254,7 +255,7 @@ def decorate_att(
     att_expr = get_att_expr(att_type)
     inpatient_att_expr = get_att_expr(inpatient_att_type)
 
-    visit_base = _visit_token_base(patient_events, visit_occurrence).localCheckpoint(eager=True)
+    visit_base = checkpoint_barrier(_visit_token_base(patient_events, visit_occurrence))
     visits = visit_base.drop("discharged_to_concept_id")
 
     vs_events = (
@@ -382,7 +383,7 @@ def decorate_att(
             ).otherwise(F.col("standard_concept_id")),
         )
     )
-    inpatient_events = inpatient_events.unionByName(discharge_events).localCheckpoint(eager=True)
+    inpatient_events = checkpoint_barrier(inpatient_events.unionByName(discharge_events))
 
     prev_date = F.lag("date").over(
         W.partitionBy("cohort_member_id", "visit_occurrence_id").orderBy("concept_order")
@@ -520,7 +521,7 @@ def decorate_death(
 
     # Unique ids above the max existing id, minted distributedly (the
     # reference uses a single-partition global window here).
-    base = (
+    base = checkpoint_barrier(
         last_ve_events.crossJoin(F.broadcast(max_visit_id))
         .withColumn(
             "visit_occurrence_id",
@@ -532,7 +533,6 @@ def decorate_death(
         .withColumn("priority", F.lit(DEATH_TOKEN_PRIORITY))
         .withColumn("event_group_id", F.lit(NA))
         .drop("max_visit_occurrence_id")
-        .localCheckpoint(eager=True)
     )
 
     vs_records = (
@@ -595,7 +595,7 @@ def decorate_demographics(
         .drop("token_order")
     )
 
-    year_token = (
+    year_token = checkpoint_barrier(
         patient_first_token.withColumn(
             "standard_concept_id",
             F.concat(F.lit("year:"), F.year("date").cast(T.StringType())),
@@ -607,7 +607,6 @@ def decorate_demographics(
         .withColumn("visit_rank_order", F.lit(0))
         .withColumn("visit_concept_order", F.lit(0))
         .withColumn("concept_order", F.lit(0))
-        .localCheckpoint(eager=True)
     )
 
     if use_age_group:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cehrbert_data_spark.operators.ids import dense_ids
+from cehrbert_data_spark.sources.writers import checkpoint_barrier
 
 EHRSHOT_SCHEMA = T.StructType(
     [
@@ -223,10 +224,9 @@ def generate_visit_id(data: DataFrame, day_cutoff: int = 1) -> DataFrame:
             F.coalesce(F.col("end").cast(T.DateType()), F.col("visit_start_date")),
         )
     )
-    domain_records = (
+    domain_records = checkpoint_barrier(
         data.where(F.col("omop_table") != "visit_occurrence")
         .withColumn("record_id", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
     )
 
     inpatient = real_visits.where(F.col("code").isin(INPATIENT_CODES))
@@ -423,7 +423,7 @@ def disconnect_visit_id(data: DataFrame, day_cutoff: int = 1) -> DataFrame:
     # the sessionization + dense_ids subtree and the union's plan explodes
     # (the reference breaks lineage here with a parquet round-trip,
     # tools/ehrshot_to_omop.py:700-707).
-    mapping = (
+    mapping = checkpoint_barrier(
         mapping.join(session_ids, ["visit_id", "session"])
         .crossJoin(F.broadcast(max_visit_id))
         .withColumn(
@@ -431,7 +431,6 @@ def disconnect_visit_id(data: DataFrame, day_cutoff: int = 1) -> DataFrame:
             (F.col("__max_visit_id") + F.col("__session_rank")).cast(vid_type),
         )
         .drop("__session_rank", "__max_visit_id", "session")
-        .localCheckpoint(eager=True)
     )
 
     # New visit rows: one per session, spanning its event starts; inpatient

@@ -21,6 +21,7 @@ from cehrbert_data_spark.omop.decorators import (
     decorate_death,
     decorate_demographics,
 )
+from cehrbert_data_spark.sources.writers import checkpoint_barrier
 
 #: Struct fields in sort-significance order (spark_utils.py:556-573). ``order``
 #: first — sort_array on the struct sorts lexicographically by field order.
@@ -161,7 +162,10 @@ def create_sequence_data_with_att(
             .withColumn("visit_start_date", F.to_date("visit_start_datetime"))
         )
 
-    events = decorate_clinical(patient_events, visit_occurrence)
+    # decorate_att reads the clinical events three times (visit spans, the
+    # inpatient join, the other-events anti-join): materialize them once so
+    # neither its barriers nor the sink re-run this lineage.
+    events = checkpoint_barrier(decorate_clinical(patient_events, visit_occurrence))
     events = decorate_att(
         events,
         visit_occurrence,

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cehrbert_data_spark.sources.writers import checkpoint_barrier
+
 
 def construct_artificial_visits(
     patient_events: DataFrame,
@@ -102,9 +104,11 @@ def construct_artificial_visits(
             else updated
         )
 
-    events_to_fix = patient_events.where(F.col("visit_occurrence_id").isNull()).withColumn(
-        "record_id", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
+    events_to_fix = checkpoint_barrier(
+        patient_events.where(F.col("visit_occurrence_id").isNull()).withColumn(
+            "record_id", F.monotonically_increasing_id()
+        )
+    )
 
     # As-of: earliest-starting visit covering the event datetime
     # (spark_utils.py:740-752) — person_id equality keeps this a hash join.
@@ -321,7 +325,7 @@ def _consolidate(
     # Session break when the start-to-prev-end gap exceeds the threshold —
     # note the gap is start-vs-PREVIOUS-END, so the generic sessionize (which
     # compares one timestamp to its own lag) is specialized here.
-    prepared = (
+    prepared = checkpoint_barrier(
         prepared.withColumn(
             "prev_visit_end_datetime",
             F.lag("visit_end_datetime").over(W.partitionBy("person_id").orderBy("visit_order")),
@@ -352,7 +356,6 @@ def _consolidate(
             )
             == 1,
         )
-        .localCheckpoint(eager=True)
     )
 
     master_visit = (

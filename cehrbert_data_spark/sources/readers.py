@@ -31,16 +31,39 @@ def read_parquet_recursive(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("recursiveFileLookup", "true").parquet(path)
 
 
+def _tree_mtime(path: str) -> float | None:
+    """Newest mtime over ``path`` and, for a directory, every entry below it
+    (None if ``path`` does not exist).
+
+    An in-place rewrite of an existing part file moves neither the table
+    directory's mtime nor that of a nested partition directory such as
+    ``split=train/``; only the file's own mtime moves, so the walk goes all
+    the way down.
+    """
+    try:
+        newest = os.stat(path).st_mtime
+        pending = [path] if os.path.isdir(path) else []
+        while pending:
+            with os.scandir(pending.pop()) as it:
+                for entry in it:
+                    newest = max(newest, entry.stat().st_mtime)
+                    if entry.is_dir():
+                        pending.append(entry.path)
+    except OSError:
+        return None
+    return newest
+
+
 @functools.lru_cache(maxsize=1024)
-def _nanos_timestamp_fields(path: str) -> list[str]:
+def _nanos_timestamp_fields(path: str, mtime: float | None) -> list[str]:
     """Column names stored as parquet TIMESTAMP(NANOS) — Spark reads them as
     long (``spark.sql.legacy.parquet.nanosAsLong``); we restore timestamps.
 
-    Cached per resolved path: the footer sniff is a driver-side glob + footer
-    read that would otherwise serialize the start of EVERY query's EVERY
-    table read (the q1 regression flagged in round 2/3). Testdata paths are
-    immutable within a run, so a per-process cache is safe; freshly-written
-    sink paths differ per run and simply occupy new slots.
+    Cached per (path, tree mtime), the key :data:`_SCHEMA_CACHE` uses too:
+    the footer sniff is a driver-side glob + footer read that would
+    otherwise serialize the start of EVERY query's EVERY table read (the q1
+    regression flagged in round 2/3), and a table rewritten in place (say
+    micros → TIMESTAMP(NANOS)) gets a new key and is sniffed again.
     """
     import glob
 
@@ -55,17 +78,18 @@ def _nanos_timestamp_fields(path: str) -> list[str]:
         schema = pq.read_schema(path)
     except Exception:
         return []
-    return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+    # tz-aware or not: Spark reads both as long under nanosAsLong
+    return [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
 
 
-#: (path, mtime) -> inferred Spark schema. Metadata-only cache (r11, guide
-#: §1/§6): ``spark.read.parquet`` re-reads the footer to infer the schema on
-#: EVERY call (~55-85 ms/table on this box); passing the schema explicitly
-#: skips that, the standard production practice. The mtime key invalidates
-#: the entry whenever the file (or directory listing) changes, so re-written
-#: sink paths re-infer. No row data is ever cached — execution always scans
-#: the parquet.
-_SCHEMA_CACHE: dict[tuple[str, float], object] = {}
+#: (path, tree mtime) -> inferred Spark schema. Metadata-only cache (r11,
+#: guide §1/§6): ``spark.read.parquet`` re-reads the footer to infer the
+#: schema on EVERY call (~55-85 ms/table on this box); passing the schema
+#: explicitly skips that, the standard production practice. The key's
+#: mtime is the newest over the whole table tree (:func:`_tree_mtime`), so
+#: any rewrite re-infers, nested partitions included. No row data is ever
+#: cached — execution always scans the parquet.
+_SCHEMA_CACHE: dict[tuple[str, float | None], object] = {}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -79,7 +103,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     file_path = os.path.join(sf_dir, f"{name}.parquet")
     dir_path = os.path.join(sf_dir, name)
     path = file_path if os.path.exists(file_path) else dir_path
-    nanos_cols = _nanos_timestamp_fields(path)
+    key = (path, _tree_mtime(path))
+    nanos_cols = _nanos_timestamp_fields(*key)
     if nanos_cols:
         # Self-sufficient on any session (not just build_session's): Spark
         # refuses TIMESTAMP(NANOS) parquet unless this runtime-settable legacy
@@ -89,31 +114,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-    try:
-        mtime = os.path.getmtime(path)
-        if os.path.isdir(path):
-            # Directory-table hardening (r12, verdict ask 7): an in-place
-            # rewrite of an existing part file does not bump the directory
-            # mtime on POSIX, so key on the newest ENTRY mtime too. Spark's
-            # own writers always create fresh part names (dir mtime moves),
-            # but external writers may not.
-            with os.scandir(path) as it:
-                newest = max(
-                    (e.stat().st_mtime for e in it), default=0.0
-                )
-            mtime = max(mtime, newest)
-        cache_key = (path, mtime)
-    except OSError:
-        cache_key = None
-    schema = _SCHEMA_CACHE.get(cache_key) if cache_key else None
+    schema = _SCHEMA_CACHE.get(key)
     if schema is not None:
         df = spark.read.schema(schema).parquet(path)
     else:
-        df = spark.read.parquet(path)
-        if cache_key is not None:
-            if len(_SCHEMA_CACHE) > 1024:
-                _SCHEMA_CACHE.clear()
-            _SCHEMA_CACHE[cache_key] = df.schema
+        df = spark.read.parquet(path)  # raises on a missing path: never cached
+        if len(_SCHEMA_CACHE) > 1024:
+            _SCHEMA_CACHE.clear()
+        _SCHEMA_CACHE[key] = df.schema
     for col in nanos_cols:
         df = df.withColumn(col, F.expr(f"timestamp_micros(`{col}` div 1000)"))
     return df

@@ -45,6 +45,14 @@ def checkpoint_barrier(
     determinism barrier without a round-trip through the object store; pass
     ``path`` to keep the reference's durable-checkpoint behavior.
 
+    Placement rule: an intermediate read by more than one branch is
+    materialized once, by the function that fans it out. Without the
+    barrier every branch, every later barrier and the sink plan and run the
+    whole upstream lineage again (``create_sequence_data_with_att`` barriers
+    the clinical events that ``decorate_att`` reads three times). Every
+    barrier under ``omop/`` goes through this function, so it alone owns
+    placement and storage level.
+
     ``storage_level`` (e.g. ``"DISK_ONLY"``) controls where the checkpoint
     blocks live. The default (MEMORY_AND_DISK) pins unified memory —
     blocks can only be evicted down to the protected storage fraction, so

@@ -137,3 +137,27 @@ def test_generate_included_concept_list(spark, omop_dir, tmp_path):
     qualified = spark.read.parquet(out)
     # only 201820 is seen by >= 2 distinct patients
     assert [r["standard_concept_id"] for r in qualified.collect()] == ["201820"]
+
+
+def test_generate_training_data_sink_reads_materialized_events(
+    spark, omop_dir, tmp_path, monkeypatch
+):
+    # The clinical-decorated events are materialized once: the plan handed
+    # to the sink reads no parquet (no branch reaches back to the durable
+    # checkpoint) and keeps only the shuffles after the last barrier.
+    from cehrbert_data_spark.plans.budget import count_exchanges, physical_plan
+
+    sunk = []
+    monkeypatch.setattr(
+        generate_training_data, "write_parquet", lambda df, path, *a, **k: sunk.append(df)
+    )
+    generate_training_data.main(
+        input_folder=omop_dir,
+        output_folder=str(tmp_path / "seq"),
+        domain_table_list=["condition_occurrence"],
+        should_construct_artificial_visits=True,
+        spark=spark,
+    )
+    (sequences,) = sunk
+    assert "FileScan" not in physical_plan(sequences, mode="simple")
+    assert count_exchanges(sequences) <= 6

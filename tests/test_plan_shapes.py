@@ -502,3 +502,54 @@ def test_kmeans_assignment_is_a_pure_projection(spark):
     p = plan(_assign(q, _seed_centroids(q, 4)))
     assert "Exchange" not in p
     assert "Join" not in p and "Window" not in p
+
+
+def _relink_inputs(spark):
+    """App-shaped events (one orphan per person, one linked event) and
+    visits, the columns generate_training_data hands to the relink."""
+    import datetime as dt
+
+    day = dt.date(2020, 1, 1)
+    at = dt.datetime(2020, 1, 1, 9)
+    visits = spark.createDataFrame(
+        [(10 * p, p, 9201 if p % 2 else 9202, day, at, day, at, 0, 40)
+         for p in range(1, 5)],
+        "visit_occurrence_id: long, person_id: long, visit_concept_id: int, "
+        "visit_start_date: date, visit_start_datetime: timestamp, "
+        "visit_end_date: date, visit_end_datetime: timestamp, "
+        "discharged_to_concept_id: int, age: int",
+    )
+    events = spark.createDataFrame(
+        [(vid, p, f"C{p}", d, ts, "condition_occurrence", None, None, None, None,
+          vconcept, 40, p)
+         for p in range(1, 5)
+         for vid, d, ts, vconcept in [
+             (10 * p, day, at, 9201 if p % 2 else 9202),
+             (None, dt.date(2020, 6, p), dt.datetime(2020, 6, p, 10), 0),
+         ]],
+        "visit_occurrence_id: long, person_id: long, standard_concept_id: string, "
+        "date: date, datetime: timestamp, domain: string, event_group_id: string, "
+        "number_as_value: float, concept_as_value: string, unit: string, "
+        "visit_concept_id: int, age: int, cohort_member_id: long",
+    )
+    return events, visits
+
+
+@pytest.mark.parametrize("relink_form", ["agg", "window"])
+def test_relink_and_clinical_no_global_window_no_python(spark, relink_form):
+    # generate_training_data materializes the clinical events before
+    # decorate_att, so its --plan_check no longer sees the artificial-visit
+    # relink or decorate_clinical: their plan discipline is pinned here.
+    from cehrbert_data_spark.omop.decorators import decorate_clinical
+    from cehrbert_data_spark.omop.visits import construct_artificial_visits
+    from cehrbert_data_spark.plans.budget import assert_plan_budget
+
+    events, visits = construct_artificial_visits(
+        *_relink_inputs(spark), relink_form=relink_form
+    )
+    clinical = decorate_clinical(events, visits)
+    for label, df in [("events", events), ("visits", visits), ("clinical", clinical)]:
+        report = assert_plan_budget(df, f"{relink_form}:{label}")
+        assert not report["global_window"] and not report["python_row_eval"]
+    # the relink really minted visits, so the plans above include minting
+    assert visits.count() == 8 and clinical.count() == 8

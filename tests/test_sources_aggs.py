@@ -172,34 +172,74 @@ def test_write_shuffled_shards_deterministic(spark, tmp_path):
     assert all(shard != sorted(shard) for shard in o1 if len(shard) > 3)
 
 
-def test_schema_cache_reinfers_on_inplace_part_rewrite(spark, tmp_path):
-    from cehrbert_data_spark.sources import readers
-
-    sf_dir = str(tmp_path)
-    tbl = os.path.join(sf_dir, "t")
-    spark.range(10).selectExpr("id AS a").write.parquet(tbl)
-    first = readers.read_table(spark, sf_dir, "t")
-    assert [f.name for f in first.schema.fields] == ["a"]
-    # rewrite the SAME part filename in place with a different schema,
-    # keeping the directory mtime fixed (POSIX: replacing file contents
-    # does not touch the parent dir's mtime when the name set is unchanged)
-    parts = [p for p in os.listdir(tbl) if p.endswith(".parquet")]
-    import pyarrow as pa
+def _rewrite_parts_in_place(part_dir, table):
+    """Overwrite every part file in ``part_dir`` with ``table`` under its
+    SAME name, keeping every directory mtime fixed (POSIX: replacing file
+    contents does not touch the parent dir's mtime when the name set is
+    unchanged), as an external writer updating a table in place would."""
     import pyarrow.parquet as pq
 
-    dir_stat = os.stat(tbl)
-    for p in parts:
-        pq.write_table(
-            pa.table({"b": pa.array([1, 2], type=pa.int64())}),
-            os.path.join(tbl, p),
-        )
+    dirs = [d for d, _, _ in os.walk(os.path.dirname(part_dir))]
+    dir_stats = {d: os.stat(d) for d in dirs}
+    for p in [p for p in os.listdir(part_dir) if p.endswith(".parquet")]:
+        pq.write_table(table, os.path.join(part_dir, p))
         # drop the stale Hadoop checksum sidecar for the rewritten bytes
-        crc = os.path.join(tbl, f".{p}.crc")
+        crc = os.path.join(part_dir, f".{p}.crc")
         if os.path.exists(crc):
             os.remove(crc)
         # make the entry mtime visibly newer than the cached key
         future = time.time() + 5
-        os.utime(os.path.join(tbl, p), (future, future))
-    os.utime(tbl, (dir_stat.st_atime, dir_stat.st_mtime))  # freeze dir mtime
-    again = readers.read_table(spark, sf_dir, "t")
+        os.utime(os.path.join(part_dir, p), (future, future))
+    for d, st in dir_stats.items():
+        os.utime(d, (st.st_atime, st.st_mtime))  # freeze dir mtimes
+
+
+def test_schema_cache_reinfers_on_inplace_part_rewrite(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cehrbert_data_spark.sources import readers
+
+    b_rows = pa.table({"b": pa.array([1, 2], type=pa.int64())})
+
+    # flat table: the rewritten file sits directly in the table dir
+    flat = str(tmp_path / "flat")
+    spark.range(10).selectExpr("id AS a").write.parquet(os.path.join(flat, "t"))
+    first = readers.read_table(spark, flat, "t")
+    assert [f.name for f in first.schema.fields] == ["a"]
+    _rewrite_parts_in_place(os.path.join(flat, "t"), b_rows)
+    again = readers.read_table(spark, flat, "t")
     assert [f.name for f in again.schema.fields] == ["b"]
+
+    # nested partition: the rewritten file sits in split=train/, so neither
+    # the table dir's nor the partition dir's mtime moves
+    nested = str(tmp_path / "nested")
+    spark.range(10).selectExpr("id AS a", "'train' AS split").write.partitionBy(
+        "split"
+    ).parquet(os.path.join(nested, "t"))
+    first = readers.read_table(spark, nested, "t")
+    assert [f.name for f in first.schema.fields] == ["a", "split"]
+    _rewrite_parts_in_place(os.path.join(nested, "t", "split=train"), b_rows)
+    again = readers.read_table(spark, nested, "t")
+    assert [f.name for f in again.schema.fields] == ["b", "split"]
+    assert {r["b"] for r in again.collect()} == {1, 2}
+
+    # micros → TIMESTAMP(NANOS) in place: the nanos sniff must re-run, or
+    # the column comes back as the raw bigint nanos count
+    nanos = str(tmp_path / "nanos")
+    os.makedirs(os.path.join(nanos, "t"))
+    ts = [datetime.datetime(2020, 1, 1, 9, 30), datetime.datetime(2021, 6, 2, 17, 5)]
+    pq.write_table(
+        pa.table({"ts": pa.array(ts, type=pa.timestamp("us", tz="UTC"))}),
+        os.path.join(nanos, "t", "part-0.parquet"),
+    )
+    first = readers.read_table(spark, nanos, "t")
+    assert first.schema["ts"].dataType.typeName() == "timestamp"
+    expected = sorted(r["ts"] for r in first.collect())
+    _rewrite_parts_in_place(
+        os.path.join(nanos, "t"),
+        pa.table({"ts": pa.array(ts, type=pa.timestamp("ns", tz="UTC"))}),
+    )
+    again = readers.read_table(spark, nanos, "t")
+    assert again.schema["ts"].dataType.typeName() == "timestamp"
+    assert sorted(r["ts"] for r in again.collect()) == expected
